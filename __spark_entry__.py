@@ -806,7 +806,7 @@ def _warp_tile_stats(out: DataFrame) -> DataFrame:
     """Comparable per-tile stats: every column BIGINT/string, payload
     compared bit-for-bit via CRC-32 of the raw tile bytes (JVM crc32).
     One selectExpr call (r8) — the Column form paid 8 py4j round trips
-    and this projection is built 4x per warp_tiles_chunks construction."""
+    and this projection is built 4x per q_warp_tiles_chunks construction."""
     return out.selectExpr(
         "CAST(z AS BIGINT) AS z",
         "CAST(x AS BIGINT) AS x",
@@ -1171,7 +1171,7 @@ def q_warp_reference_options(spark, sf_dir):
     before pinning).  Config list is shared with the pin tool via
     geowarp_spark.sources.reference_configs so the sides cannot drift."""
     from geowarp_spark.operators.warp_tiles import (
-        fixture_chunk_records, tiles_df, warp_tiles_broadcast_variants)
+        fixture_chunk_records, tiles_df, warp_tiles_broadcast)
     from geowarp_spark.sources.fixtures import build_fixture
     from geowarp_spark.sources.reference_configs import (
         OPTIONS_BBOX, OPTIONS_OUT_SIZE, OPTIONS_ZOOM, options_variants,
@@ -1183,8 +1183,8 @@ def q_warp_reference_options(spark, sf_dir):
     # all 20 variants in one pass: one broadcast, one tile-table scan
     variants = [(tag, method, py_opts(js_opts))
                 for tag, method, js_opts in options_variants()]
-    out = warp_tiles_broadcast_variants(
-        tiles, recs, variants, out_size=OPTIONS_OUT_SIZE)
+    out = warp_tiles_broadcast(
+        tiles, recs, variants=variants, out_size=OPTIONS_OUT_SIZE)
     return out.select(
         F.col("z").cast("long").alias("z"),
         F.col("x").cast("long").alias("x"),
@@ -1288,7 +1288,7 @@ def q_similarity_lsh(spark, sf_dir):  # ANN scale path — deterministic LSH,
 def _lsh_bucket_duck(vcol: str, n_planes: int, seed: int = 0) -> str:
     """DuckDB replica of similarity.lsh_bucket_expr: sign-bit bucket from
     the deterministic integer hyperplanes (seed 0: ((p*31+i*17)%7)-3;
-    seeded bands add the nonlinear-in-i term, similarity._plane_weight_sql)."""
+    seeded bands add the nonlinear-in-i term, similarity._plane_weight)."""
     terms = []
     for p in range(n_planes):
         if seed == 0:

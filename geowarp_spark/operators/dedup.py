@@ -459,7 +459,7 @@ def embedding_near_dups(emb: DataFrame, threshold=0.95, id_col="vec_id",
 
     Design (same shape as minhash_lsh_pairs):
     - ``bands`` independent ``n_planes``-plane hyperplane families
-      (similarity._plane_weight_sql seeds) — a pair is a candidate if it
+      (similarity._plane_weight seeds) — a pair is a candidate if it
       shares a bucket in ANY band (recall via OR, so the banded join is
       a recall superset of the old single-table join);
     - every (band, bucket) above ``max_bucket`` rows is dropped from

@@ -24,20 +24,14 @@ def cosine_expr(a_col: str, b_col: str):
     return F.expr(f"({dot}) / nullif(({na}) * ({nb}), 0.0)")
 
 
-def _plane_weight_sql(p: int, seed: int) -> str:
-    """Deterministic integer hyperplane weight for (plane p, dim i):
-    seed 0 is the original pinned family ((p*31 + i*17) % 7) - 3; a
-    nonzero seed adds a term NONLINEAR in i (i*i % 19) so different
-    seeds give genuinely different hyperplanes — the base family has
-    period 7 in p, so 'more planes' alone would just repeat the same 7
-    hyperplanes and banded bucketings would be perfectly correlated."""
-    if seed == 0:
-        return f"(({p} * 31 + i * 17) % 7) - 3"
-    return f"(({p} * 31 + i * 17 + {seed} * ((i * i) % 19 + 1) * 23) % 7) - 3"
-
-
 def _plane_weight(p: int, i, seed: int):
-    """numpy mirror of _plane_weight_sql (i may be an int array)."""
+    """Deterministic integer hyperplane weight for (plane p, dim i; i
+    may be an int array): seed 0 is the original pinned family
+    ((p*31 + i*17) % 7) - 3; a nonzero seed adds a term NONLINEAR in i
+    (i*i % 19) so different seeds give genuinely different hyperplanes —
+    the base family has period 7 in p, so 'more planes' alone would just
+    repeat the same 7 hyperplanes and banded bucketings would be
+    perfectly correlated."""
     import numpy as np
 
     i = np.asarray(i, dtype=np.int64)
@@ -45,23 +39,6 @@ def _plane_weight(p: int, i, seed: int):
         return ((p * 31 + i * 17) % 7 - 3).astype(np.float64)
     return ((p * 31 + i * 17 + seed * ((i * i) % 19 + 1) * 23) % 7
             - 3).astype(np.float64)
-
-
-def lsh_bucket_sql_expr(vec_col: str, n_planes=12, seed=0):
-    """The original pure-SQL form of lsh_bucket_expr (interpreted
-    higher-order functions) — kept for plan-audit comparisons and as
-    executable documentation of the exact semantics the vectorized
-    form reproduces."""
-    bits = []
-    for p in range(n_planes):
-        w = _plane_weight_sql(p, seed)
-        dot = (
-            f"aggregate(zip_with({vec_col}, transform(sequence(0, size({vec_col}) - 1), "
-            f"i -> {w}), (x, w) -> CAST(x AS DOUBLE) * w), "
-            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        bits.append(f"(CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END)")
-    return F.expr(" + ".join(bits)).cast("bigint")
 
 
 def lsh_bucket_expr(vec_col: str, n_planes=12, seed=0):

@@ -13,27 +13,38 @@ from pyspark.sql import functions as F
 
 
 def test_warp_tiles_all_strategies_identical(spark):
-    """The cell equi-join, broadcast theta-join, broadcast-map and
-    chunk-anchored plans must produce bit-identical tiles (same kernel,
-    same inputs).  'chunks' exercises the scale path: single-chunk
-    windows + owned-rect merge instead of a stitched mosaic."""
+    """Both surviving plans — broadcast_map and the chunk-anchored scale
+    plan — reproduce the pinned tables of the independent serial
+    full-raster warp (tools/pin_expected.py) that the driver gates
+    warp_tiles and warp_boxstats_chunks on, tile for tile: (z, x, y,
+    bands, valid_px, crc32(data)).  chunk=128 splits both rasters into
+    several chunks, so 'chunks' merges owned partial rects across chunk
+    seams (near, and the halo-bounded median window)."""
+    import zlib
+
     from geowarp_spark.operators.warp_tiles import warp_fixture_to_tiles
     from geowarp_spark.sources.fixtures import build_fixture
 
-    for fx_id, method in (("tiny_4326", "near"), ("rgba_webmerc", "median")):
+    fixtures_dir = os.path.join(os.path.dirname(__file__), "..", "fixtures")
+    cases = (
+        ("rgb_smallscale", "near", [9, 10], 128, "expected_warp_tiles"),
+        ("rgba_webmerc", "median", [8, 9], 64, "expected_warp_boxstats"),
+    )
+    for fx_id, method, zooms, out_size, pinned in cases:
+        exp = pd.read_parquet(os.path.join(fixtures_dir, f"{pinned}.parquet"))
+        expected = {(int(r.z), int(r.x), int(r.y), int(r.bands),
+                     int(r.valid_px), int(r.payload_crc))
+                    for r in exp.itertuples()}
+        assert len(expected) == len(exp) > 0, pinned
         fx = build_fixture(fx_id)
-        outs = {}
-        for strat in ("cells", "broadcast", "broadcast_map", "chunks"):
-            outs[strat] = {(r["z"], r["x"], r["y"]): r["data"] for r in
-                           warp_fixture_to_tiles(spark, fx, zooms=[10], method=method,
-                                                 out_size=32, chunk=128,
-                                                 join_strategy=strat).collect()}
-        a = outs["cells"]
-        assert len(a) > 0
-        for strat in ("broadcast", "broadcast_map", "chunks"):
-            b = outs[strat]
-            assert a.keys() == b.keys(), (fx_id, strat)
-            assert all(a[k] == b[k] for k in a), (fx_id, strat)
+        for strat in ("broadcast_map", "chunks"):
+            got = {(r["z"], r["x"], r["y"], r["bands"], r["valid_px"],
+                    zlib.crc32(r["data"]))
+                   for r in warp_fixture_to_tiles(
+                       spark, fx, zooms=zooms, method=method,
+                       out_size=out_size, chunk=128,
+                       join_strategy=strat).collect()}
+            assert got == expected, (fx_id, strat)
 
 
 def test_warp_chunks_cutline_resolution_rowrange(spark):
@@ -70,13 +81,62 @@ def test_warp_chunks_cutline_resolution_rowrange(spark):
 
 
 def test_warp_tiles_default_strategy_is_scale_safe():
-    """VERDICT r2 missing #4: the bare default must never be the
-    payload-duplicating 'cells' plan."""
+    """VERDICT r2 missing #4: warp_tiles defaults to the scale-safe
+    chunk-anchored plan, and it is the ONLY plan warp_tiles runs — any
+    other join_strategy fails loudly and points at broadcast_map instead
+    of silently running a different plan."""
     import inspect
 
     from geowarp_spark.operators.warp_tiles import warp_tiles
 
     assert inspect.signature(warp_tiles).parameters["join_strategy"].default == "chunks"
+    for strat in ("cells", "broadcast", "broadcast_map"):
+        with pytest.raises(ValueError, match="broadcast_map"):
+            warp_tiles(None, None, join_strategy=strat)
+
+
+def test_warp_fixture_auto_sizes_tiles_for_resolved_plan(spark, monkeypatch):
+    """'auto' resolves BEFORE the tile table is sized: when it picks the
+    chunk plan, the tile table gets the chunk plan's row-sized Range
+    width, not the broadcast plan's full width, and the tiles match an
+    explicit 'chunks' run."""
+    import re
+
+    from geowarp_spark.operators import warp_tiles as wt
+    from geowarp_spark.sources.fixtures import build_fixture
+
+    monkeypatch.setattr(wt, "AUTO_BROADCAST_BYTES", 0)
+    fx = build_fixture("tiny_4326")
+    dfs = {strat: wt.warp_fixture_to_tiles(spark, fx, zooms=[10], out_size=32,
+                                           chunk=128, join_strategy=strat)
+           for strat in ("auto", "chunks")}
+    splits = {strat: re.findall(r"Range \(\d+, \d+, step=1, splits=(\d+)\)",
+                                _plan(df))
+              for strat, df in dfs.items()}
+    assert splits["chunks"] and splits["auto"] == splits["chunks"], splits
+    rows = {strat: sorted((r["z"], r["x"], r["y"], r["data"], r["valid_px"])
+                          for r in df.collect())
+            for strat, df in dfs.items()}
+    assert rows["chunks"] and rows["auto"] == rows["chunks"]
+
+
+def test_tiles_df_z31_matches_tile_bbox(spark):
+    """z >= 31 tile tables build under ANSI mode (2^z does not overflow
+    an INT cast) and their bboxes follow the tilebelt formulas."""
+    from geowarp_spark.grid.tiles import tile_to_bbox_3857, tile_to_bbox_4326
+    from geowarp_spark.operators.warp_tiles import tiles_df
+
+    rows = tiles_df(spark, [31], bbox_4326=[10.0, 45.0, 10.0000002,
+                                            45.0000002]).collect()
+    assert 0 < len(rows) <= 9
+    for r in rows:
+        assert r["z"] == 31 and r["x"] >= 2 ** 30
+        np.testing.assert_allclose(r["bbox_4326"],
+                                   tile_to_bbox_4326(r["x"], r["y"], 31),
+                                   rtol=1e-14, atol=0)
+        np.testing.assert_allclose(r["bbox_3857"],
+                                   tile_to_bbox_3857(r["x"], r["y"], 31),
+                                   rtol=1e-14, atol=0)
 
 
 def test_warp_tiles_matches_single_kernel(spark):
@@ -722,9 +782,41 @@ def test_warp_chunks_stage_widths_survive_aqe(spark):
     """Regression guard for the r3 scaling catch: AQE coalesced the
     few-KB tile-key exchange to ~1 partition (serializing the per-chunk
     warp stage at any core count) and the partials merge shuffle to a
-    handful of tasks.  The fixed plan pins both widths with
-    user-specified repartitions; assert the partials input actually
-    spreads chunks across partitions at runtime."""
+    handful of tasks.  warp_tiles pins both widths with user-specified
+    repartitions; after a real run, the FINAL adaptive plan must hold
+    both hash exchanges at defaultParallelism with no coalescing shuffle
+    read above them."""
+    import re
+
+    from geowarp_spark.kernels.bbox import reproject_bbox
+    from geowarp_spark.kernels.proj import transformer
+    from geowarp_spark.operators.warp_tiles import (
+        chunks_to_df, tiles_df, warp_tiles)
+    from geowarp_spark.sources.fixtures import build_fixture
+
+    fx = build_fixture("rgba_webmerc")  # 16 chunks at chunk=128
+    bb = reproject_bbox(fx["bbox"], transformer(fx["srs"], 4326).transform,
+                        density=16, nan_strategy="skip")
+    tiles = tiles_df(spark, [8], bbox_4326=bb, rows_per_partition=65536)
+    chunks = chunks_to_df(spark, fx, chunk=128, halo=8)
+    out = warp_tiles(tiles, chunks, method="near", out_size=32,
+                     chunk=128, halo=8)
+    assert out.collect()
+    plan = _plan(out)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    widths = re.findall(
+        r"Exchange hashpartitioning\([^()]*, (\d+)\), REPARTITION_BY_NUM",
+        final)
+    n = spark.sparkContext.defaultParallelism
+    assert widths == [str(n)] * 2, (widths, n)
+    assert "AQEShuffleRead" not in final, final
+
+
+def test_warp_chunks_fused_metadata_exchange_survives_aqe(spark):
+    """r8 companion to test_warp_chunks_stage_widths_survive_aqe: the
+    repartition-BEFORE-groupBy form (one exchange) must still spread the
+    per-chunk tile-key rows across partitions under AQE."""
     from geowarp_spark.operators.warp_tiles import (
         _cover_cells_sql, chunks_to_df, tiles_df)
     from geowarp_spark.sources.fixtures import build_fixture
@@ -733,29 +825,31 @@ def test_warp_chunks_stage_widths_survive_aqe(spark):
 
     fx = build_fixture("rgba_webmerc")
     inv = transformer(fx["srs"], 4326)
-    bb = reproject_bbox(fx["bbox"], inv.transform, density=16, nan_strategy="skip")
-    tiles = tiles_df(spark, [8], bbox_4326=bb)
+    bb = reproject_bbox(fx["bbox"], inv.transform, density=16,
+                        nan_strategy="skip")
+    tiles = tiles_df(spark, [8], bbox_4326=bb, rows_per_partition=65536)
     chunks = chunks_to_df(spark, fx, chunk=128, halo=8)
     tmeta = tiles.select("z", "x", "y", "bbox_4326")
     cmeta = chunks.select("raster_id", "row_off", "col_off",
                           F.col("bbox_4326").alias("chunk_bbox_4326"))
-    t = tmeta.withColumn("cell", F.explode(F.expr(_cover_cells_sql("bbox_4326", 6))))
-    c = cmeta.withColumn("cell", F.explode(F.expr(_cover_cells_sql("chunk_bbox_4326", 6))))
+    t = tmeta.withColumn("cell", F.explode(F.expr(_cover_cells_sql("bbox_4326"))))
+    c = cmeta.withColumn("cell", F.explode(F.expr(_cover_cells_sql("chunk_bbox_4326"))))
     overlap = (
         (F.col("bbox_4326")[0] <= F.col("chunk_bbox_4326")[2])
         & (F.col("bbox_4326")[2] >= F.col("chunk_bbox_4326")[0])
         & (F.col("bbox_4326")[1] <= F.col("chunk_bbox_4326")[3])
         & (F.col("bbox_4326")[3] >= F.col("chunk_bbox_4326")[1]))
     pairs = (t.join(c, "cell").drop("cell").filter(overlap)
-             .select("raster_id", "row_off", "col_off", "z", "x", "y").distinct())
-    grouped = pairs.groupBy("raster_id", "row_off", "col_off").agg(
-        F.collect_list(F.struct("z", "x", "y")).alias("tile_keys"))
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    grouped = grouped.repartition(n_parts)
+             .select("raster_id", "row_off", "col_off", "z", "x", "y"))
+    n_parts = spark.sparkContext.defaultParallelism
+    grouped = pairs.repartition(n_parts, "raster_id", "row_off", "col_off") \
+        .groupBy("raster_id", "row_off", "col_off").agg(
+            F.collect_set(F.struct("z", "x", "y")).alias("tile_keys"))
     withtiles = chunks.join(grouped, ["raster_id", "row_off", "col_off"])
     dist = (withtiles.select(F.spark_partition_id().alias("p"))
             .groupBy("p").count().collect())
-    # 16 chunks round-robined: no single partition may hold them all
+    # 16 chunks hash-partitioned on their keys: no single partition may
+    # hold them all
     assert len(dist) > 1, dist
     assert max(r["count"] for r in dist) < 16, dist
 
@@ -1524,7 +1618,7 @@ def test_ivf_kmeans_quantizer_recall_and_determinism(spark):
 
 def test_mosaic_meta_df_matches_composite_metadata(spark):
     """r8 drift guard: the analytic lattice metadata (mosaic_meta_df,
-    used as warp_tiles_chunks' pair-discovery side so the composite
+    used as warp_tiles' pair-discovery side so the composite
     executes once per action) must carry EXACTLY the (raster_id,
     row_off, col_off, bbox_4326) the composite's rows carry — any drift
     silently changes the matched tile set.  Meta rows for hole positions
@@ -1641,55 +1735,36 @@ def test_lang_id_keep_cols_matches_self_join(spark, sf_dir):
     assert joined == kept
 
 
-def test_warp_chunks_fused_metadata_exchange_survives_aqe(spark):
-    """r8 companion to test_warp_chunks_stage_widths_survive_aqe: the
-    repartition-BEFORE-groupBy form (one exchange) must still spread the
-    per-chunk tile-key rows across partitions under AQE."""
-    from geowarp_spark.operators.warp_tiles import (
-        _cover_cells_sql, chunks_to_df, tiles_df)
-    from geowarp_spark.sources.fixtures import build_fixture
-    from geowarp_spark.kernels.bbox import reproject_bbox
-    from geowarp_spark.kernels.proj import transformer
+def _plane_weight_sql(p: int, seed: int) -> str:
+    """SQL form of similarity._plane_weight for (plane p, dim i)."""
+    if seed == 0:
+        return f"(({p} * 31 + i * 17) % 7) - 3"
+    return f"(({p} * 31 + i * 17 + {seed} * ((i * i) % 19 + 1) * 23) % 7) - 3"
 
-    fx = build_fixture("rgba_webmerc")
-    inv = transformer(fx["srs"], 4326)
-    bb = reproject_bbox(fx["bbox"], inv.transform, density=16,
-                        nan_strategy="skip")
-    tiles = tiles_df(spark, [8], bbox_4326=bb, rows_per_partition=65536)
-    chunks = chunks_to_df(spark, fx, chunk=128, halo=8)
-    tmeta = tiles.select("z", "x", "y", "bbox_4326")
-    cmeta = chunks.select("raster_id", "row_off", "col_off",
-                          F.col("bbox_4326").alias("chunk_bbox_4326"))
-    t = tmeta.withColumn("cell", F.explode(F.expr(_cover_cells_sql("bbox_4326", 6))))
-    c = cmeta.withColumn("cell", F.explode(F.expr(_cover_cells_sql("chunk_bbox_4326", 6))))
-    overlap = (
-        (F.col("bbox_4326")[0] <= F.col("chunk_bbox_4326")[2])
-        & (F.col("bbox_4326")[2] >= F.col("chunk_bbox_4326")[0])
-        & (F.col("bbox_4326")[1] <= F.col("chunk_bbox_4326")[3])
-        & (F.col("bbox_4326")[3] >= F.col("chunk_bbox_4326")[1]))
-    pairs = (t.join(c, "cell").drop("cell").filter(overlap)
-             .select("raster_id", "row_off", "col_off", "z", "x", "y"))
-    n_parts = spark.sparkContext.defaultParallelism
-    grouped = pairs.repartition(n_parts, "raster_id", "row_off", "col_off") \
-        .groupBy("raster_id", "row_off", "col_off").agg(
-            F.collect_set(F.struct("z", "x", "y")).alias("tile_keys"))
-    withtiles = chunks.join(grouped, ["raster_id", "row_off", "col_off"])
-    dist = (withtiles.select(F.spark_partition_id().alias("p"))
-            .groupBy("p").count().collect())
-    # 16 chunks hash-partitioned on their keys: no single partition may
-    # hold them all
-    assert len(dist) > 1, dist
-    assert max(r["count"] for r in dist) < 16, dist
+
+def _lsh_bucket_sql(vec_col: str, n_planes: int, seed: int):
+    """The original pure-SQL form of lsh_bucket_expr (interpreted
+    higher-order functions): the oracle of its vectorized form."""
+    bits = []
+    for p in range(n_planes):
+        w = _plane_weight_sql(p, seed)
+        dot = (
+            f"aggregate(zip_with({vec_col}, transform(sequence(0, size({vec_col}) - 1), "
+            f"i -> {w}), (x, w) -> CAST(x AS DOUBLE) * w), "
+            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+        )
+        bits.append(f"(CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END)")
+    return F.expr(" + ".join(bits)).cast("bigint")
 
 
 def test_lsh_bucket_vectorized_matches_sql(spark, sf_dir):
     """r8: the Arrow-vectorized lsh_bucket_expr must reproduce the
     interpreted SQL form bit-for-bit — including left-to-right float
     accumulation, NaN (Spark: NaN >= 0 is true), NULL vectors
-    (bucket 0) and empty vectors (all sign bits set) — for both the
-    seed-0 family and a banded seed."""
-    from geowarp_spark.operators.similarity import (lsh_bucket_expr,
-                                                    lsh_bucket_sql_expr)
+    (bucket 0) and empty vectors (also bucket 0: zip_with pads with
+    NULLs, so every dot is NULL and every CASE falls to ELSE 0) — for
+    both the seed-0 family and a banded seed."""
+    from geowarp_spark.operators.similarity import lsh_bucket_expr
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     edge = spark.createDataFrame(
@@ -1702,7 +1777,7 @@ def test_lsh_bucket_vectorized_matches_sql(spark, sf_dir):
         rows = both.select(
             "vec_id",
             lsh_bucket_expr("embedding", planes, seed).alias("vec_b"),
-            lsh_bucket_sql_expr("embedding", planes, seed).alias("sql_b"),
+            _lsh_bucket_sql("embedding", planes, seed).alias("sql_b"),
         ).collect()
         for r in rows:
             assert r["vec_b"] == (r["sql_b"] if r["sql_b"] is not None
