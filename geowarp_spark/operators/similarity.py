@@ -63,6 +63,10 @@ def lsh_bucket_expr(vec_col: str, n_planes=12, seed=0):
       TRUE for NaN — mirrored with isnan();
     - a NULL vector yields bucket 0 (every CASE WHEN NULL falls to
       ELSE 0), mirrored explicitly;
+    - a vector holding a NULL ELEMENT also yields bucket 0 (its dot
+      folds to NULL).  Arrow hands a NULL element to pandas as NaN,
+      which would set every bit, so a JVM-side ``exists(x IS NULL)``
+      flag rides along as the UDF's second input and forces bucket 0;
     - an EMPTY vector also yields bucket 0: sequence(0, size-1) on
       size 0 is sequence(0, -1) = [0, -1], so zip_with pads x with
       NULLs and every dot folds to NULL -> ELSE 0 (pinned by the
@@ -76,10 +80,11 @@ def lsh_bucket_expr(vec_col: str, n_planes=12, seed=0):
     # NB: `from __future__ import annotations` stringifies hints, which
     # pandas_udf can't infer — set real annotations explicitly (same
     # workaround as the extract_invariant entry).
-    def _bucket_fn(v):
+    def _bucket_fn(v, has_null):
         out = np.zeros(len(v), dtype=np.int64)
         arrs = v.to_numpy()
-        isnull = np.array([a is None for a in arrs])
+        isnull = np.array([a is None for a in arrs]) \
+            | has_null.to_numpy(dtype=bool)
         dims = np.array([0 if a is None else len(a) for a in arrs])
         for d in np.unique(dims[~isnull]):
             if d == 0:
@@ -100,9 +105,12 @@ def lsh_bucket_expr(vec_col: str, n_planes=12, seed=0):
             out[idx] = b
         return pd.Series(out)
 
-    _bucket_fn.__annotations__ = {"v": pd.Series, "return": pd.Series}
+    _bucket_fn.__annotations__ = {"v": pd.Series, "has_null": pd.Series,
+                                  "return": pd.Series}
     _bucket = F.pandas_udf(_bucket_fn, "long")
-    return _bucket(F.col(vec_col))
+    has_null = F.coalesce(F.exists(vec_col, lambda x: x.isNull()),
+                          F.lit(False))
+    return _bucket(F.col(vec_col), has_null)
 
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k=10,

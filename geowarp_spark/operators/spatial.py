@@ -340,6 +340,12 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     Results stay DISTRIBUTED (union of per-pass settled DataFrames);
     nothing unbounded ever lands on the driver.
 
+    Single-action contract: each pass that feeds a settledness decision
+    is checkpointed, but a final full-cover pass (``cur_ring >= 2^z -
+    1``, the widest and most expensive) is not, so every action on the
+    returned DataFrame recomputes it.  Run one action on the result, or
+    persist it before running several.
+
     ``prune_col`` (hilbert scheme only): name of a STORED Hilbert cell
     column at the SAME zoom ``z`` (written with
     ``write_hilbert_sorted``).  Each pass then pre-filters the points
